@@ -1,11 +1,13 @@
 package graft.functions
 
 import graft.vlm.Geo
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native expressions for the hot geometry kernels. The Scala-UDF forms
   * work but pay CatalystTypeConverters boxing for every nested
@@ -192,5 +194,57 @@ object MinBoxDistance {
       i += 1
     }
     math.sqrt(best)
+  }
+}
+
+/** Enhanced relative position of box 1 to box 2 (geometry.py:424-495):
+  * struct(depth, horizontal, vertical, center_distance) from the centroid
+  * difference of two vertex sets against `threshold`. The centroids are
+  * summed from ArrayData in [[Geo.centroid]]'s order and classified by
+  * [[Geo.relativePositionOfCenters]], so the result equals
+  * [[Geo.enhancedRelativePosition]] bit for bit.
+  */
+case class RelativePosition(left: Expression, right: Expression, threshold: Double) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(ArrayType(DoubleType, _), _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) =>
+      TypeCheckResult.TypeCheckFailure(s"relative_position requires two array<array<double>>, got (${l.simpleString}, ${r.simpleString})")
+  }
+  override def dataType: DataType = RelativePosition.resultType
+  override def prettyName: String = "relative_position"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    RelativePosition.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], threshold)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.RelativePosition.compute($a, $b, ${threshold}D);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): RelativePosition =
+    copy(left = newLeft, right = newRight)
+}
+
+object RelativePosition {
+  val resultType: StructType = new StructType()
+    .add("depth", StringType, nullable = false)
+    .add("horizontal", StringType, nullable = false)
+    .add("vertical", StringType, nullable = false)
+    .add("center_distance", DoubleType, nullable = false)
+
+  private def centroid(vs: ArrayData): Geo.Vec3 = {
+    val c = Array(0.0, 0.0, 0.0)
+    val n = vs.numElements()
+    var i = 0
+    while (i < n) {
+      val v = vs.getArray(i)
+      c(0) += v.getDouble(0); c(1) += v.getDouble(1); c(2) += v.getDouble(2)
+      i += 1
+    }
+    c.map(_ / n)
+  }
+
+  def compute(a: ArrayData, b: ArrayData, threshold: Double): InternalRow = {
+    val (d, h, v, cd) = Geo.relativePositionOfCenters(centroid(a), centroid(b), threshold)
+    InternalRow(UTF8String.fromString(d), UTF8String.fromString(h), UTF8String.fromString(v), cd)
   }
 }

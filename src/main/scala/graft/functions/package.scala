@@ -58,6 +58,12 @@ package object functions {
   def toCameraFrame(verts: Column, extrinsics: Column): Column =
     shims.column(ToCameraFrame(shims.expression(verts), shims.expression(extrinsics)))
 
+  /** Enhanced relative position of two vertex sets:
+    * struct(depth, horizontal, vertical, center_distance).
+    */
+  def relativePosition(a: Column, b: Column, threshold: Double): Column =
+    shims.column(RelativePosition(shims.expression(a), shims.expression(b), threshold))
+
   /** Morton (Z-order) bit interleave of two non-negative bigint bucket ids. */
   def zInterleave(a: Column, b: Column): Column =
     shims.column(ZInterleave(shims.expression(a), shims.expression(b)))

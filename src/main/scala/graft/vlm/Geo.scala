@@ -169,14 +169,23 @@ object Geo {
     */
   def enhancedRelativePosition(
       v1: Array[Vec3], v2: Array[Vec3],
-      threshold: Double = 0.1): (String, String, String, Double) = {
-    def centerOf(vs: Array[Vec3]): Vec3 = {
-      val c = Array(0.0, 0.0, 0.0)
-      vs.foreach { v => c(0) += v(0); c(1) += v(1); c(2) += v(2) }
-      c.map(_ / vs.length)
-    }
-    val c1 = centerOf(v1)
-    val c2 = centerOf(v2)
+      threshold: Double = 0.1): (String, String, String, Double) =
+    relativePositionOfCenters(centroid(v1), centroid(v2), threshold)
+
+  /** Mean vertex: per-axis sum in vertex order from 0.0, divided by the
+    * vertex count — the order [[graft.functions.RelativePosition]] repeats
+    * over ArrayData.
+    */
+  def centroid(vs: Array[Vec3]): Vec3 = {
+    val c = Array(0.0, 0.0, 0.0)
+    vs.foreach { v => c(0) += v(0); c(1) += v(1); c(2) += v(2) }
+    c.map(_ / vs.length)
+  }
+
+  /** The classification half of [[enhancedRelativePosition]], from the two
+    * centers.
+    */
+  def relativePositionOfCenters(c1: Vec3, c2: Vec3, threshold: Double): (String, String, String, Double) = {
     val centerDist = dist3(c1, c2)
     val dz = c1(2) - c2(2)
     val depth =

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   *
   * Split per SURVEY.md §7.3: anything expressible as built-in column math
   * is plain column composition (normalize-angle, center distance, max
-  * dimension, seeded randomness, depth stats); the matrix-shaped hot-path
-  * kernels (vertices, 8×8 min distance, camera distance, frame transform)
-  * are native ArrayData expressions in [[graft.functions]]; only the cold
-  * string-struct-returning kernels (relative position, camera position,
-  * quaternion conversion) remain Scala UDFs.
+  * dimension, seeded randomness, depth stats, camera position); the
+  * hot-path kernels over vertex arrays (vertices, 8×8 min distance, camera
+  * distance, frame transform, relative position) are native ArrayData
+  * expressions in [[graft.functions]]; only cold kernels (camera
+  * orientation, legacy relative position, IoU, quaternion conversion)
+  * remain Scala UDFs.
   */
 object GeoFunctions {
 
@@ -46,6 +47,13 @@ object GeoFunctions {
       category.startsWith("class_") && regexp_extract(category, "^class_([0-9]+)$", 1) =!= "",
       concat(lit("object_"), regexp_extract(category, "^class_([0-9]+)$", 1))
     ).otherwise(category)
+
+  /** Camera position E[:3, 3] from a camera-to-world extrinsics, NULL
+    * unless it is 4×4 ([[Geo.cameraPosition]]; geometry.py:135-162).
+    */
+  def cameraPositionCol(extrinsics: Column): Column =
+    when(size(extrinsics) === 4 && forall(extrinsics, r => size(r) === 4),
+      array((0 until 3).map(i => extrinsics.getItem(i).getItem(3)): _*))
 
   /** A5: depth statistics from a sampled depth-value array — valid-pixel
     * mask (0 < d < 100, finite; utils.py:104-106) then count/min/max/exact
@@ -99,24 +107,15 @@ object GeoFunctions {
   def toCameraFrameCol(vertices: Column, extrinsics: Column): Column =
     graft.functions.toCameraFrame(vertices, extrinsics)
 
-  // ------------------------------------------------------------------ UDFs
-
-  /** Camera position from 4×4 extrinsics, null-safe (geometry.py:135-162). */
-  val cameraPositionUdf = udf {
-    (extrinsics: Seq[Seq[Double]]) =>
-      if (extrinsics == null) None
-      else Geo.cameraPosition(extrinsics.map(_.toArray).toArray).map(_.toSeq)
-  }
-
-  /** Enhanced relative position: returns struct(depth, horizontal, vertical,
-    * center_distance) (geometry.py:424-495).
+  /** Enhanced relative position of box 1 to box 2 from their camera-frame
+    * vertices: struct(depth, horizontal, vertical, center_distance)
+    * (geometry.py:424-495) — native expression
+    * ([[graft.functions.RelativePosition]]).
     */
-  val relativePositionUdf = udf {
-    (a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
-      val (d, h, v, cd) = Geo.enhancedRelativePosition(
-        a.map(_.toArray).toArray, b.map(_.toArray).toArray)
-      (d, h, v, cd)
-  }
+  def relativePositionCol(v1: Column, v2: Column, threshold: Double = 0.1): Column =
+    graft.functions.relativePosition(v1, v2, threshold)
+
+  // ------------------------------------------------------------------ UDFs
 
   /** G8 camera orientation basis vectors from 4×4 extrinsics: struct of
     * (right, down, up, forward, back) world vectors

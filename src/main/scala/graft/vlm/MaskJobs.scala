@@ -119,9 +119,18 @@ object MaskJobs {
     */
   private[vlm] def viewKey(path: Column): Column = {
     val stem = regexp_replace(regexp_extract(path, "([^/]+)\\.[^.]+$", 1), "_domain_.*$", "")
-    val loc = regexp_extract(path, "/taskonomy/([^/]+)/", 1)
+    val loc = taskonomyLocation(path)
     concat_ws("/", when(loc =!= "", loc), stem) // concat_ws skips the null
   }
+
+  /** Taskonomy location of a file at `.../taskonomy/<location>/<file>`: the
+    * directory holding the file, when its parent is named `taskonomy`; ""
+    * otherwise. Anchored at the file, so a root whose own path contains a
+    * `taskonomy` segment (a landing root named `taskonomy`) still yields the
+    * location, not the domain directory.
+    */
+  private[vlm] def taskonomyLocation(path: Column): Column =
+    regexp_extract(path, "/taskonomy/([^/]+)/[^/]*$", 1)
 
   private def pairedScans(
       spark: SparkSession,

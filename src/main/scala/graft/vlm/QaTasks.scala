@@ -4,22 +4,26 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The six 3D QA task generators as declarative `DataFrame => DataFrame`
-  * transforms over unified frame records (SURVEY.md §7.1 step 5).
+/** The six 3D QA task generators as declarative transforms over unified
+  * frame records (SURVEY.md §7.1 step 5). Each returns its QA pairs with the
+  * order its ids follow; [[QaPrimitives.assignIds]] numbers them.
   *
-  * Every task is per-frame work: explode → column math/UDF → re-assemble, so
-  * the plans are shuffle-free except (a) the pair self-joins, which shuffle
-  * once on `image_id` and stay partition-local after that, and (b) the final
-  * contiguous QA-id window. All randomness (distractors, option shuffles,
+  * Every task is per-frame work: explode → column math → re-assemble, so the
+  * plans are shuffle-free except (a) the pair self-joins, which shuffle once
+  * on `image_id` and stay partition-local after that, and (b) the one range
+  * exchange that orders all tasks' pairs for numbering; it carries only the
+  * output columns and order keys, and the numbered rows are stored once for
+  * every sink. All randomness (distractors, option shuffles,
   * sampling) is md5-seeded on stable row identity — a documented improvement
   * over the reference's unseeded `random` (SURVEY §7.4 item 3): identical
   * output for any partitioning, cluster size, or rerun.
   *
-  * Output schema matches [[FrameSchema.QaPair]]:
+  * Numbered output matches [[FrameSchema.QaPair]]:
   * (id, question, answer, answer_type, options, metadata).
   */
 object QaTasks {
   import GeoFunctions._
+  import QaPrimitives.{distractor, shuffleToLetter, Unnumbered}
 
   // ---- config mirroring QA_generation/config.py:91-121 -------------------
   val MinCountObjects = 1 // object_count: params.get('min_objects', 1)
@@ -33,6 +37,13 @@ object QaTasks {
   val RelPosThreshold = 0.1
   val V1SamplesPerFrame = 2
 
+  /** obj_obj_rel_pos answers: each of the six directional relations (the
+    * "Same …" ones never reach an answer) → its lowercase word, as a literal
+    * lookup rather than a per-row `lower`.
+    */
+  private val RelationAnswers: Column =
+    typedLit(Seq("Nearer", "Farther", "Left", "Right", "Above", "Below").map(r => r -> r.toLowerCase).toMap)
+
   /** Skew guard for the J8 pair self-joins (SURVEY §7.4 item 2): a frame
     * with n boxes emits n² /2 pairs, so one pathological frame (a mislabeled
     * scene with thousands of instances) would dominate its partition at
@@ -43,7 +54,7 @@ object QaTasks {
   val MaxPairBoxes = 64
 
   /** All tasks keyed by their reference task name. */
-  def all: Map[String, (DataFrame, String) => DataFrame] = Map(
+  def all: Map[String, DataFrame => Unnumbered] = Map(
     "object_count" -> objectCount,
     "object_3d_size" -> object3dSize,
     "cam_obj_distance" -> camObjDistance,
@@ -81,20 +92,10 @@ object QaTasks {
       b.getField("xl"), b.getField("yl"), b.getField("zl"),
       b.getField("pitch"), b.getField("yaw"), b.getField("roll"))
 
-  /** Contiguous per-task QA ids `{dataset}_{task}_{n:06d}` assigned in a
-    * stable total order (qa_base.py:54-65 / SURVEY W6) — distributed via
-    * range-partitioned zipWithIndex, not a single-partition global window.
-    */
-  private def assignIds(df: DataFrame, datasetName: String, task: String, order: Seq[Column]): DataFrame =
-    QaPrimitives.withContiguousIds(df, "id", s"${datasetName}_${task}_%06d", order)
-      .select(col("id"), col("question"), col("answer"), col("answer_type"), col("options"), col("metadata"))
-
-  import QaPrimitives.{distractor, shuffleToLetter}
-
   // ------------------------------------------------------------------ tasks
 
   /** object_count — tasks/tasks_3d/object_count_qa.py:28-100. */
-  def objectCount(frames: DataFrame, datasetName: String): DataFrame = {
+  def objectCount(frames: DataFrame): Unnumbered = {
     val b = boxes(frames)
       .withColumn("readable", parseClassCategoryCol(col("bbox").getField("category")))
     val counts = b
@@ -143,11 +144,11 @@ object QaTasks {
           "category_counts" -> to_json(col("cat_counts")),
           "unit" -> lit("count")
         ))
-    assignIds(q, datasetName, "object_count", Seq(col("image_id")))
+    Unnumbered(q, Seq(col("image_id")))
   }
 
   /** object_3d_size — tasks/tasks_3d/object_3d_size_qa.py:28-100. */
-  def object3dSize(frames: DataFrame, datasetName: String): DataFrame = {
+  def object3dSize(frames: DataFrame): Unnumbered = {
     val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
     val firstPerCat = boxes(frames)
       .withColumn("rk", row_number().over(w))
@@ -177,13 +178,13 @@ object QaTasks {
           "answer_value" -> col("ans"),
           "unit" -> lit("centimeters")
         ))
-    assignIds(shuffled, datasetName, "object_3d_size", Seq(col("image_id"), col("bbox.category")))
+    Unnumbered(shuffled, Seq(col("image_id"), col("bbox.category")))
   }
 
   /** cam_obj_distance — tasks/tasks_3d/cam_obj_distance_qa.py:28-100;
     * distance = ‖center‖, boxes already camera-frame (geometry.py:401-421).
     */
-  def camObjDistance(frames: DataFrame, datasetName: String): DataFrame = {
+  def camObjDistance(frames: DataFrame): Unnumbered = {
     val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
     val q = boxes(frames)
       .withColumn("rk", row_number().over(w))
@@ -205,13 +206,13 @@ object QaTasks {
           "unit" -> lit("meters"),
           "uses_extrinsics" -> col("camera").getField("extrinsics").isNotNull
         ))
-    assignIds(q, datasetName, "cam_obj_distance", Seq(col("image_id"), col("bbox.category")))
+    Unnumbered(q, Seq(col("image_id"), col("bbox.category")))
   }
 
   /** obj_obj_distance — tasks/tasks_3d/obj_obj_distance_qa.py:28-100 (J8
     * i<j pair self-join; min 8×8 vertex distance; 0.2–20 m gate).
     */
-  def objObjDistance(frames: DataFrame, datasetName: String): DataFrame = {
+  def objObjDistance(frames: DataFrame): Unnumbered = {
     val b = boxes(frames)
       .filter(col("bbox_idx") < MaxPairBoxes) // J8 skew guard
       .withColumn("verts", vertsOf(col("bbox")))
@@ -237,14 +238,14 @@ object QaTasks {
           "distance_meters" -> round(col("dist"), 1),
           "unit" -> lit("meters")
         ))
-    assignIds(q, datasetName, "obj_obj_distance", Seq(col("image_id"), col("i"), col("j")))
+    Unnumbered(q, Seq(col("image_id"), col("i"), col("j")))
   }
 
   /** obj_obj_rel_pos — tasks/tasks_3d/obj_obj_rel_pos_qa.py:28-140 over
     * geometry.py:424-495: camera-frame center diffs, 0.1 m threshold,
     * seeded aspect choice.
     */
-  def objObjRelPos(frames: DataFrame, datasetName: String): DataFrame = {
+  def objObjRelPos(frames: DataFrame): Unnumbered = {
     val b = boxes(frames)
       .filter(col("camera").getField("extrinsics").isNotNull)
       .filter(col("bbox_idx") < MaxPairBoxes) // J8 skew guard
@@ -257,7 +258,7 @@ object QaTasks {
     val rel = a
       .join(c, col("image_id") === col("image_id2") && col("i") < col("j"))
       .withColumn("min_dist", minBoxDistanceCol(col("w1"), col("w2")))
-      .withColumn("rp", relativePositionUdf(col("v1"), col("v2")))
+      .withColumn("rp", relativePositionCol(col("v1"), col("v2"), RelPosThreshold))
       .withColumn("r1", parseClassCategoryCol(col("b1").getField("category")))
       .withColumn("r2", parseClassCategoryCol(col("b2").getField("category")))
     // candidate aspects in the reference's fixed order: depth, horizontal, vertical
@@ -266,9 +267,9 @@ object QaTasks {
         "aspects",
         filter(
           array(
-            struct(lit("depth").as("t"), col("rp").getField("_1").as("rel")),
-            struct(lit("horizontal").as("t"), col("rp").getField("_2").as("rel")),
-            struct(lit("vertical").as("t"), col("rp").getField("_3").as("rel"))
+            struct(lit("depth").as("t"), col("rp").getField("depth").as("rel")),
+            struct(lit("horizontal").as("t"), col("rp").getField("horizontal").as("rel")),
+            struct(lit("vertical").as("t"), col("rp").getField("vertical").as("rel"))
           ),
           x => !x.getField("rel").startsWith("Same")
         ))
@@ -283,7 +284,7 @@ object QaTasks {
           .when(col("pick.t") === "horizontal",
             format_string("Is the %s to the left or right of the %s from the camera's perspective?", col("r1"), col("r2")))
           .otherwise(format_string("Is the %s above or below the %s from the camera's perspective?", col("r1"), col("r2"))))
-      .withColumn("answer", lower(col("pick.rel")))
+      .withColumn("answer", RelationAnswers(col("pick.rel")))
       .withColumn("answer_type", lit("text"))
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
@@ -292,13 +293,13 @@ object QaTasks {
           "object1_category" -> col("b1").getField("category"),
           "object2_category" -> col("b2").getField("category"),
           "aspect" -> col("pick.t"),
-          "depth_relation" -> col("rp").getField("_1"),
-          "horizontal_relation" -> col("rp").getField("_2"),
-          "vertical_relation" -> col("rp").getField("_3"),
-          "center_distance" -> round(col("rp").getField("_4"), 3),
+          "depth_relation" -> col("rp").getField("depth"),
+          "horizontal_relation" -> col("rp").getField("horizontal"),
+          "vertical_relation" -> col("rp").getField("vertical"),
+          "center_distance" -> round(col("rp").getField("center_distance"), 3),
           "min_distance" -> round(col("min_dist"), 3)
         ))
-    assignIds(q, datasetName, "obj_obj_rel_pos", Seq(col("image_id"), col("i"), col("j")))
+    Unnumbered(q, Seq(col("image_id"), col("i"), col("j")))
   }
 
   /** cam_obj_rel_dist — tasks/tasks_3d/cam_obj_rel_dist_qa.py: distances
@@ -306,9 +307,9 @@ object QaTasks {
     * distance semantics, deliberately different from cam_obj_distance —
     * SURVEY §7.3), three variants with seeded sampling.
     */
-  def camObjRelDist(frames: DataFrame, datasetName: String): DataFrame = {
+  def camObjRelDist(frames: DataFrame): Unnumbered = {
     val withCam = boxes(frames)
-      .withColumn("cam_pos", cameraPositionUdf(col("camera").getField("extrinsics")))
+      .withColumn("cam_pos", cameraPositionCol(col("camera").getField("extrinsics")))
       .filter(col("cam_pos").isNotNull)
       .withColumn("verts", vertsOf(col("bbox")))
       .withColumn("dist", cameraToBoxDistanceCol(col("cam_pos"), col("verts")))
@@ -424,6 +425,6 @@ object QaTasks {
     val unioned = v1.selectExpr(cols: _*)
       .unionByName(v2.selectExpr(cols: _*))
       .unionByName(v3.selectExpr(cols: _*))
-    assignIds(unioned, datasetName, "cam_obj_rel_dist", Seq(col("image_id"), col("ord1"), col("ord2")))
+    Unnumbered(unioned, Seq(col("image_id"), col("ord1"), col("ord2")))
   }
 }

@@ -7,21 +7,21 @@ import org.apache.spark.sql.expressions.Window
 /** The three legacy 2D QA task generators (tasks/tasks_2d/), completing the
   * reference's nine-task surface (SURVEY.md §7.1 step 5). Same declarative
   * shape as [[QaTasks]]: per-frame explode → filters → column math →
-  * seeded distractors → contiguous ids.
+  * seeded distractors → the order for contiguous ids.
   *
   * 2D boxes are the ingest-normalized single encoding
   * ([[FrameSchema.Bbox2D]]: x, y, w, h, area?, category) — the reference's
   * three raw encodings are folded at read time (SURVEY §7.4 item 5).
   */
 object QaTasks2D {
-  import QaPrimitives.{distractor, shuffleToLetter}
+  import QaPrimitives.{distractor, shuffleToLetter, Unnumbered}
 
   val MinBboxArea = 100.0 // F5: skip boxes under 100 px² (bbox_2d_size_qa.py:71-73)
   val CountBounds = (1, 20) // F6: frames with 1..20 objects (object_count_2d_qa.py:61-63)
   val SizeNumOptions = 4
   val SizeDistractorRange = (0.4, 1.8)
 
-  def all: Map[String, (DataFrame, String) => DataFrame] = Map(
+  def all: Map[String, DataFrame => Unnumbered] = Map(
     "object_count_2d" -> objectCount2d,
     "bbox_2d_size" -> bbox2dSize,
     "object_2d_size" -> object2dSize
@@ -53,14 +53,10 @@ object QaTasks2D {
   private def areaOf(b: Column): Column =
     coalesce(b.getField("area"), b.getField("w") * b.getField("h"))
 
-  private def assignIds(df: DataFrame, datasetName: String, task: String, order: Seq[Column]): DataFrame =
-    QaPrimitives.withContiguousIds(df, "id", s"${datasetName}_${task}_%06d", order)
-      .select(col("id"), col("question"), col("answer"), col("answer_type"), col("options"), col("metadata"))
-
   /** object_count_2d — tasks_2d/object_count_2d_qa.py: per-frame category
     * counts over 2D boxes, `unknown` excluded (F4), numerical answer.
     */
-  def objectCount2d(frames: DataFrame, datasetName: String): DataFrame = {
+  def objectCount2d(frames: DataFrame): Unnumbered = {
     val counts = boxes2d(frames)
       .withColumn("readable", GeoFunctions.parseClassCategoryCol(col("bbox").getField("category")))
       .filter(col("readable") =!= "unknown")
@@ -77,13 +73,13 @@ object QaTasks2D {
         "count" -> col("cnt"),
         "unit" -> lit("count")
       ))
-    assignIds(q, datasetName, "object_count_2d", Seq(col("image_id"), col("readable")))
+    Unnumbered(q, Seq(col("image_id"), col("readable")))
   }
 
   /** bbox_2d_size — tasks_2d/bbox_2d_size_qa.py: first box per category
     * (W4), area >= 100 px² (F5), multiple-choice width×height.
     */
-  def bbox2dSize(frames: DataFrame, datasetName: String): DataFrame = {
+  def bbox2dSize(frames: DataFrame): Unnumbered = {
     val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
     val sized = boxes2d(frames)
       .withColumn("rk", row_number().over(w))
@@ -114,13 +110,13 @@ object QaTasks2D {
         "answer_value" -> col("ans"),
         "unit" -> lit("pixels")
       ))
-    assignIds(shuffled, datasetName, "bbox_2d_size", Seq(col("image_id"), col("bbox.category")))
+    Unnumbered(shuffled, Seq(col("image_id"), col("bbox.category")))
   }
 
   /** object_2d_size — tasks_2d/object_2d_size_qa.py: first box per category,
     * area >= 100 px² (F5), multiple-choice area in pixels.
     */
-  def object2dSize(frames: DataFrame, datasetName: String): DataFrame = {
+  def object2dSize(frames: DataFrame): Unnumbered = {
     val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
     val sized = boxes2d(frames)
       .withColumn("rk", row_number().over(w))
@@ -146,6 +142,6 @@ object QaTasks2D {
         "answer_value" -> col("ans"),
         "unit" -> lit("square_pixels")
       ))
-    assignIds(shuffled, datasetName, "object_2d_size", Seq(col("image_id"), col("bbox.category")))
+    Unnumbered(shuffled, Seq(col("image_id"), col("bbox.category")))
   }
 }

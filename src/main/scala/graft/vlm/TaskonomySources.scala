@@ -44,7 +44,7 @@ object TaskonomySources {
       .withColumn("file", input_file_name())
     raw
       .select(
-        regexp_extract(col("file"), "/taskonomy/([^/]+)/", 1).as("location"),
+        MaskJobs.taskonomyLocation(col("file")).as("location"),
         MaskJobs.viewKey(col("file")).as("view"),
         fieldOr(raw, "resolution", lit(512L)).cast("int").as("resolution"),
         fieldOr(raw, "field_of_view_rads", lit(1.0489)).cast("double").as("fov"),

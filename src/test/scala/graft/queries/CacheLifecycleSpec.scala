@@ -175,4 +175,37 @@ class CacheLifecycleSpec extends SparkSpec {
       assert(warns.isEmpty, s"attempt $attempt raced into warnings:\n${warns.mkString("\n")}")
     }
   }
+
+  test("QA runs free their stored rows when they return and when they throw") {
+    import graft.vlm.{FrameSchema, QaPipeline}
+    import FrameSchema._
+    import spark.implicits._
+    val ident = Some(Seq(Seq(1.0, 0, 0, 0), Seq(0, 1.0, 0, 0), Seq(0, 0, 1.0, 0), Seq(0, 0, 0, 1.0)))
+    val cam = Camera(500, 500, 320, 240, 640, 480, Seq(Seq(500.0, 0, 320), Seq(0, 500.0, 240), Seq(0, 0, 1.0)), ident)
+    val frames = (0 until 4).map { i =>
+      FrameRecord("lifecycle", "s", s"img_$i", Some("scene"), None, Some(i.toString), None, None, None, "none", cam,
+        None, Seq.empty, (0 to i).map(b => Bbox3D(b * 2.0, 0, 3, 1, 1, 1, 0, 0, 0, "chair")), None)
+    }.toDF()
+    val tasks = Seq("object_count", "obj_obj_distance")
+    // RDDs a run persisted and left behind; ids, so the cleaner freeing an
+    // earlier suite's garbage meanwhile cannot mask a leak
+    def leftBehind(body: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      body
+      spark.sparkContext.getPersistentRDDs.keySet.diff(before).toSet
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-qa-lifecycle")
+    assert(leftBehind(assert(QaPipeline.run(spark, frames, "ds", out.toString, tasks).values.sum > 0)).isEmpty,
+      "a returning run left its task rows stored")
+    // a sink fails after every task was stored: the output dir lies below a file
+    val file = java.nio.file.Files.createTempFile("graft-qa-lifecycle", ".txt")
+    assert(leftBehind(intercept[Exception](QaPipeline.run(spark, frames, "ds", s"$file/out", tasks))).isEmpty,
+      "a run whose sink threw left its task rows stored")
+    // the storing job itself fails
+    val failing = spark.range(10).select(org.apache.spark.sql.functions.raise_error(
+      org.apache.spark.sql.functions.lit("lifecycle probe")))
+    assert(leftBehind(intercept[Exception](
+      org.apache.spark.sql.graft.shims.localCheckpoint(failing)(_.size))).isEmpty,
+      "a storing job that threw left its blocks stored")
+  }
 }

@@ -71,13 +71,13 @@ class ConformSpec extends SparkSpec {
     val boxes = f.getSeq[Row](f.fieldIndex("bounding_boxes_3d"))
     assert(boxes.length == 3 && boxes.forall(_.getAs[String]("category") == "chair"))
     // the re-read corpus feeds the QA engine identically
-    assert(QaTasks.objectCount(back, "matterport").count() ==
-      QaTasks.objectCount(conformed, "matterport").count())
+    assert(qaPairs(back, "matterport", "object_count").length ==
+      qaPairs(conformed, "matterport", "object_count").length)
   }
 
   test("conformed processor output runs the QA engine (object_count end-to-end)") {
     val conformed = FrameSchema.conform(matterportFrames())
-    val qa = QaTasks.objectCount(conformed, "matterport").collect()
+    val qa = qaPairs(conformed, "matterport", "object_count")
     assert(qa.nonEmpty)
     val q = qa.head
     assert(q.getAs[String]("id").startsWith("matterport_object_count_"))

@@ -1,5 +1,10 @@
 package graft.vlm
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -98,4 +103,49 @@ object GeoProps extends Properties("Geo") {
         }
       }
     }
+
+  // ---- relative position: the native expression against the Geo kernel
+  private val vertsType = ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
+  private val relPos = graft.functions.RelativePosition(
+    BoundReference(0, vertsType, nullable = false), BoundReference(1, vertsType, nullable = false), 0.1)
+  private val relPosCodegen = GenerateUnsafeProjection.generate(Seq(relPos))
+
+  /** Center offsets on, just off and far from the 0.1 threshold. */
+  private val offset: Gen[Double] = Gen.frequency(
+    3 -> Gen.oneOf(0.1, -0.1, 0.0),
+    3 -> Gen.zip(Gen.oneOf(0.1, -0.1), Gen.choose(-3, 3)).map { case (d, k) => d + k * math.ulp(d) },
+    2 -> Gen.choose(-0.2, 0.2),
+    2 -> Gen.choose(-20.0, 20.0))
+
+  property("RelativePosition expression equals enhancedRelativePosition, at the 0.1 threshold too") =
+    forAll(triple, dims3, angles3, Gen.zip(offset, offset, offset), Gen.oneOf(true, false)) {
+      case ((x, y, z), (xl, yl, zl), (p, yw, r), (dx, dy, dz), rotated) =>
+        val (np, ny, nr) =
+          if (rotated) (Geo.normalizeAngle(p), Geo.normalizeAngle(yw), Geo.normalizeAngle(r)) else (0.0, 0.0, 0.0)
+        // box 2 is box 1 moved by the offsets: its center differences sit at
+        // |Δ| ≈ 0.1, where rounding decides the side of the threshold
+        val a = Geo.bboxVertices(x, y, z, xl, yl, zl, np, ny, nr)
+        val b = a.map(v => Array(v(0) + dx, v(1) + dy, v(2) + dz))
+        relPosMatches(b, a)
+    }
+
+  property("RelativePosition expression equals enhancedRelativePosition at |Δ| = 0.1 exactly") =
+    forAll(Gen.oneOf(0, 1, 2), Gen.oneOf(0.1, -0.1, math.nextUp(0.1), math.nextDown(0.1), math.nextDown(-0.1))) { (axis, d) =>
+      // one-vertex sets: the centroid is the vertex, so Δ is d itself
+      val a = Array(Array(0.0, 0.0, 0.0))
+      val b = Array(Array.tabulate(3)(k => if (k == axis) d else 0.0))
+      val relation = Geo.enhancedRelativePosition(b, a).productElement(Seq(1, 2, 0)(axis)).toString
+      relPosMatches(b, a) && relation.startsWith("Same") == (math.abs(d) < 0.1)
+    }
+
+  /** The expression, interpreted and generated, against the Geo kernel. */
+  private def relPosMatches(b: Array[Array[Double]], a: Array[Array[Double]]): Boolean = {
+    val (d, h, v, cd) = Geo.enhancedRelativePosition(b, a)
+    def arrayData(vs: Array[Array[Double]]) = new GenericArrayData(vs.map(p => new GenericArrayData(p): AnyRef))
+    val input = InternalRow(arrayData(b), arrayData(a))
+    Seq(relPos.eval(input).asInstanceOf[InternalRow], relPosCodegen(input).getStruct(0, 4)).forall { out =>
+      out.getUTF8String(0).toString == d && out.getUTF8String(1).toString == h &&
+        out.getUTF8String(2).toString == v && out.getDouble(3) == cd
+    }
+  }
 }

@@ -35,9 +35,10 @@ class GoldenSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("image_id")))
 
   test("all nine tasks reproduce the golden output hash") {
-    val rows = QaPipeline.generate(corpus, "golden").toSeq.sortBy(_._1).flatMap { case (task, df) =>
-      df.collect().map(r => s"$task|${r.json}")
-    }.sorted
+    val batch = QaPipeline.generate(corpus, "golden")
+    val rows =
+      try batch.rows.toSeq.sortBy(_._1).flatMap { case (task, df) => df.collect().map(r => s"$task|${r.json}") }.sorted
+      finally batch.release()
     assert(rows.nonEmpty)
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString

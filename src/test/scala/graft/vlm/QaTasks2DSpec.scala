@@ -29,7 +29,7 @@ class QaTasks2DSpec extends SparkSpec {
   ).toDF()
 
   test("object_count_2d counts per category within frame bounds (F6)") {
-    val qa = QaTasks2D.objectCount2d(fixture, "testds").collect()
+    val qa = qaPairs(fixture, "testds", "object_count_2d")
     val byKey = qa.map(r => (r.getAs[Map[String, String]]("metadata")("image_id"),
       r.getAs[Map[String, String]]("metadata")("target_category")) -> r.getAs[String]("answer")).toMap
     assert(byKey(("i1", "person")) == "2")
@@ -39,7 +39,7 @@ class QaTasks2DSpec extends SparkSpec {
   }
 
   test("bbox_2d_size gates on area and dedups per category (F5/W4); letter maps to true dims") {
-    val rows = QaTasks2D.bbox2dSize(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "bbox_2d_size")
     // i1: person (first of two, 50x80) only — chair gated; i2: table
     assert(rows.length == 2)
     rows.foreach { r =>
@@ -56,13 +56,13 @@ class QaTasks2DSpec extends SparkSpec {
   }
 
   test("object_2d_size uses stored area over w*h (geometry.py:318-335 fallback)") {
-    val rows = QaTasks2D.object2dSize(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "object_2d_size")
     val table = rows.find(_.getAs[Map[String, String]]("metadata")("category") == "table").get
     assert(table.getAs[Map[String, String]]("metadata")("area_px") == "4000.0")
   }
 
   test("2D tasks are deterministic across runs") {
-    def snapshot() = QaTasks2D.all.values.flatMap(t => t(fixture, "testds").collect().map(_.toString)).toSeq.sorted
+    def snapshot() = QaTasks2D.all.keys.flatMap(t => qaPairs(fixture, "testds", t).map(_.toString)).toSeq.sorted
     assert(snapshot() == snapshot())
   }
 

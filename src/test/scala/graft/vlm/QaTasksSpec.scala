@@ -41,7 +41,7 @@ class QaTasksSpec extends SparkSpec {
   ).toDF()
 
   test("object_count: category-specific question for small scenes (object_count_qa.py:66-80)") {
-    val qa = QaTasks.objectCount(fixture, "testds").collect().map(r => r.getAs[String]("id") -> r).toMap
+    val qa = qaPairs(fixture, "testds", "object_count").map(r => r.getAs[String]("id") -> r).toMap
     assert(qa.size == 4) // img_004 has no boxes
     val byImage = qa.values.map(r => r.getAs[Map[String, String]]("metadata")("image_id") -> r).toMap
     val q1 = byImage("img_001")
@@ -56,13 +56,13 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("object_count: ids are contiguous and zero-based (qa_base.py:54-65)") {
-    val ids = QaTasks.objectCount(fixture, "testds").collect().map(_.getAs[String]("id")).sorted
+    val ids = qaPairs(fixture, "testds", "object_count").map(_.getAs[String]("id")).sorted
     assert(ids.head == "testds_object_count_000000")
     assert(ids.length == 4 && ids.last == "testds_object_count_000003")
   }
 
   test("object_3d_size: letter answer maps to correct value (object_3d_size_qa.py:52-100)") {
-    val rows = QaTasks.object3dSize(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "object_3d_size")
     // one question per (frame, category): 2+2+1+0+2 = 7
     assert(rows.length == 7)
     rows.foreach { r =>
@@ -82,7 +82,7 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("cam_obj_distance: ‖center‖ distance, min gate (cam_obj_distance_qa.py:56-100)") {
-    val rows = QaTasks.camObjDistance(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "cam_obj_distance")
     val byCat = rows.map(r => r.getAs[Map[String, String]]("metadata")("category") -> r).toMap
     // person first occurrence at (1,1,1): sqrt(3) ≈ 1.7
     assert(byCat("person").getAs[String]("answer") == "1.7")
@@ -93,7 +93,7 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("obj_obj_distance: min vertex distance with range gate (obj_obj_distance_qa.py:56-100)") {
-    val rows = QaTasks.objObjDistance(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "obj_obj_distance")
     val img2 = rows.filter(_.getAs[Map[String, String]]("metadata")("image_id") == "img_002")
     assert(img2.length == 1)
     // unit boxes centered 3 m apart → min vertex gap 2.0
@@ -108,7 +108,7 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("obj_obj_rel_pos: camera-frame relations with identity extrinsics (obj_obj_rel_pos_qa.py)") {
-    val rows = QaTasks.objObjRelPos(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "obj_obj_rel_pos")
     // img_005 has no extrinsics → excluded
     assert(!rows.exists(_.getAs[Map[String, String]]("metadata")("image_id") == "img_005"))
     val img2 = rows.filter(_.getAs[Map[String, String]]("metadata")("image_id") == "img_002")
@@ -122,7 +122,7 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("cam_obj_rel_dist: v1/v2/v3 variants with seeded sampling (cam_obj_rel_dist_qa.py)") {
-    val rows = QaTasks.camObjRelDist(fixture, "testds").collect()
+    val rows = qaPairs(fixture, "testds", "cam_obj_rel_dist")
     val byVariant = rows.groupBy(_.getAs[Map[String, String]]("metadata")("variant"))
     // img_001 (n=3): v1×2 samples×2 + v2 + v3 = 6; img_002 (n=2): v1×1×2 = 2
     assert(byVariant("v1_closest").length == 3)
@@ -142,9 +142,9 @@ class QaTasksSpec extends SparkSpec {
   }
 
   test("all tasks are deterministic across runs (seeded M3 randomness)") {
-    QaTasks.all.foreach { case (name, fn) =>
-      val a = fn(fixture, "testds").collect().map(_.toString).sorted
-      val b = fn(fixture, "testds").collect().map(_.toString).sorted
+    QaTasks.all.keys.foreach { name =>
+      val a = qaPairs(fixture, "testds", name).map(_.toString).sorted
+      val b = qaPairs(fixture, "testds", name).map(_.toString).sorted
       assert(a.sameElements(b), s"task $name not deterministic")
     }
   }

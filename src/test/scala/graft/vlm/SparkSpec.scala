@@ -1,6 +1,6 @@
 package graft.vlm
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -9,6 +9,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
+
+  /** One QA task's numbered pairs, numbered as a pipeline run numbers them. */
+  def qaPairs(frames: DataFrame, datasetName: String, task: String): Array[Row] = {
+    val batch = QaPipeline.generate(frames, datasetName, Seq(task))
+    try batch.rows(task).collect() finally batch.release()
+  }
 }
 
 object SparkSpec {

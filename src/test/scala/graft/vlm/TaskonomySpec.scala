@@ -19,8 +19,7 @@ class TaskonomySpec extends SparkSpec {
     * (1,2,3) with zero rotation; resolution 20, fov = 2·atan(1/10) so
     * fx = 10·... chosen for fx = resolution/(2·tan(fov/2)).
     */
-  private def fixture(): Path = {
-    val root = Files.createTempDirectory("graft-taskonomy")
+  private def fixture(root: Path = Files.createTempDirectory("graft-taskonomy")): Path = {
     val loc = "loc_a"
     val dirs = Seq("point_info", "segment_unsup25d", "segment_semantic", "depth_euclidean")
       .map(d => d -> root.resolve(s"$d/taskonomy/$loc")).toMap
@@ -68,6 +67,17 @@ class TaskonomySpec extends SparkSpec {
     // each frame's depth stats come from its OWN location's raster
     assert(frames(0).getStruct(frames(0).fieldIndex("depth_stats")).getAs[Double]("mean") == 1.0)
     assert(frames(1).getStruct(frames(1).fieldIndex("depth_stats")).getAs[Double]("mean") == 2.0)
+  }
+
+  test("a landing root named taskonomy still pairs views by location") {
+    // every path then carries a second /taskonomy/ segment above the domain
+    // directories; the location is the one directly above the file
+    val root = fixture(Files.createDirectory(Files.createTempDirectory("graft-landing").resolve("taskonomy")))
+    val frames = TaskonomySources.taskonomyFrames(spark, root.toString).collect()
+    assert(frames.length == 1)
+    assert(frames.head.getAs[String]("split") == "loc_a")
+    assert(frames.head.getAs[String]("image_id") == "loc_a_point_0_view_0")
+    assert(frames.head.getSeq[Row](frames.head.fieldIndex("bounding_boxes_3d")).length == 1)
   }
 
   test("taskonomyFrames: point_info camera + paired 2D/3D mask boxes (F15; taskonomy_processor.py:239-412)") {
