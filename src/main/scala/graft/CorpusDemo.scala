@@ -29,7 +29,7 @@ object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = GraftSession.getOrCreate()
+    val spark = GraftSession.getOrCreate(Some(sfDir))
     import graft.queries.PipelineFns._
 
     val t0 = System.nanoTime()

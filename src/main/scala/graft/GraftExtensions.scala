@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions installer: registers graft's custom expressions
   * for SQL use (`SELECT simhash56(hashes) ...`) and the
   * [[graft.plans.RangeJoinRewrite]] optimizer rule. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — wired in
-  * [[GraftSession]]. The DataFrame API ([[graft.functions]]) works without
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — set by
+  * [[GraftSession.settings]]. The DataFrame API ([[graft.functions]]) works without
   * registration (and without the rule, marked range joins still compute
   * the same result on the unrewritten plan).
   */
@@ -50,16 +50,4 @@ object GraftExtensions {
       (children: Seq[Expression]) => ZInterleave(children(0), children(1))
     )
   )
-
-  /** Late registration onto an already-created session (extensions config
-    * only applies at session build time).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registry.foreach { case (id, info, builder) =>
-      org.apache.spark.sql.graft.shims.registerFunction(spark, id.funcName, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session factory with the settings this engine assumes.
+/** The only place a SparkSession is built, from one settings table.
   *
   * Tuned for the driver harness (single-JVM `local[N]`) but every knob is
   * cluster-sane: AQE on (runtime shuffle-partition coalescing + skew-join
@@ -111,76 +111,80 @@ object GraftSession {
     n
   }
 
-  /** Shuffle-writer selection threshold (spark.shuffle.sort.bypassMergeThreshold,
-    * Spark default 200). The bypass-merge writer opens R partition files per
-    * MAP TASK; at this engine's shuffle geometry (R = 32–128 reduce
-    * partitions × as many map tasks) that is thousands of file
-    * opens+streams per shuffle, and r18 thread-sampling showed
-    * DiskBlockObjectWriter.initialize/createTempShuffleBlock dominating the
-    * verify family's runtime (d6 ×10 warm: 4.2 s → 1.8 s with the sort
-    * writer). At 100 TB R is far above any threshold, so the SORT writer is
-    * what production runs anyway — a low threshold makes demo-scale
-    * shuffles exercise the same writer instead of a worse one production
-    * never uses. 16 keeps genuinely tiny fan-outs (R ≤ 16: scalar/bounded
-    * shuffles) on the cheap bypass path. Env-overridable for A/Bs.
+  /** Local cores for every session: SPARK_GRAFT_CPUS, else every core the
+    * JVM sees.
     */
-  def bypassMergeThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "16")
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
-  /** Let the planner pick shuffled-hash join when its size conditions are
-    * met (spark.sql.join.preferSortMergeJoin=false — the guide's §9
-    * baseline): SHJ skips both sides' sorts and Spark only chooses it when
-    * one side's per-partition build fits memory, so sort-merge remains the
-    * fallback for unbounded sides. Measured r19 (warm A/B, same window):
-    * j7 1.55 → 1.37, j4 0.96 → 0.87, j8 1.09 → 1.02 at sf0.1.
-    * Env-overridable for A/Bs.
+  /** The session profile: every Spark setting this engine assumes, for a
+    * session on `cores` local cores reading `corpusBytes` of compressed
+    * input. Tests, the oracle dump, the benches and every main run this one
+    * table, so the plans the oracle checks are the plans the bench times and
+    * the tests assert.
     */
-  def preferSortMergeJoin: String =
-    sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
+  def settings(cores: Int, corpusBytes: Long): Map[String, String] = Map(
+    "spark.master" -> s"local[$cores]",
+    "spark.app.name" -> "graft",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    // stages start at an input-sized core multiple and AQE coalesces small
+    // ones back down (see initialPartitions): a flat 2× start fixed the ×10
+    // spill but cost sub-second demo-scale queries 2× in scheduling overhead
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      initialPartitions(corpusBytes, cores).toString,
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // graft's SQL functions (simhash56, …) and the RangeJoinRewrite rule
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // Spark's default 200 picks the bypass-merge writer, which opens one file
+    // per reduce partition per map task; r18 thread sampling showed that
+    // churn dominating the verify family (d6 ×10 warm: 4.2 s → 1.8 s with
+    // the sort writer, OPTIMIZATION_r18.md). Production-scale reduce counts
+    // are far above any threshold, so demo-scale shuffles run the sort writer
+    // production runs; fan-outs of at most 16 keep the cheap bypass path.
+    "spark.shuffle.sort.bypassMergeThreshold" -> "16",
+    // shuffled-hash join when one side's partitions fit memory, sort-merge
+    // otherwise; r19 warm A/B at sf0.1: j7 1.55 → 1.37 s, j4 0.96 → 0.87 s,
+    // j8 1.09 → 1.02 s
+    PreferSortMergeJoin -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    // QA metadata maps follow Python-dict last-wins collision semantics
+    "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
+    // the driver's testdata parquet uses TIMESTAMP(NANOS), which Spark only
+    // reads as a long; Tables/queries convert explicitly where needed
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // wide generated plans (128-slice signatures at the capacity preset)
+    // exceed the 25-field default and WARN-spam plan truncation notices
+    "spark.sql.debug.maxToStringFields" -> "2000",
+  )
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Size-adaptive shuffle parallelism, BY STAGE INPUT BYTES (see
-    // initialPartitions): stages start at an input-sized core multiple and
-    // AQE coalesces small ones back down, so a wide stage's per-task
-    // working set no longer grows linearly with the corpus at a pinned
-    // count, while small-corpus sessions keep the 1× start whose absence
-    // cost sub-second queries 2× in scheduling overhead (round-14 lesson:
-    // a FLAT 2× start fixed the ×10 spill but taxed every demo-scale
-    // query). SPARK_GRAFT_INIT_MULT stays as an explicit override for
-    // experiments; corpus-switching mains re-size via sizeShuffleFor.
-    val initial = sys.env.get("SPARK_GRAFT_INIT_MULT") match {
-      case Some(m) => m.toInt * cores
-      case None => initialPartitions(
-        dirBytes(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")), cores)
-    }
-    SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // registers graft's custom expressions for SQL use (simhash56, …)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassMergeThreshold)
-      .config("spark.sql.join.preferSortMergeJoin", preferSortMergeJoin)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initial.toString)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // QA metadata maps follow Python-dict last-wins collision semantics
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // the driver's testdata parquet uses TIMESTAMP(NANOS), which Spark only
-      // reads as a long; Tables/queries convert explicitly where needed
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-  }
+  private val PreferSortMergeJoin = "spark.sql.join.preferSortMergeJoin"
 
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
+  /** [[settings]] for a session reading the corpus at `sfDir` (none, or a
+    * missing dir: the 1× start). SPARK_GRAFT_PREFER_SMJ=1 turns sort-merge
+    * preference back on, the control arm of the shuffled-hash-join A/B.
+    */
+  def profile(cores: Int, sfDir: Option[String]): Map[String, String] =
+    settings(cores, sfDir.fold(0L)(dirBytes)) ++ sys.env.get("SPARK_GRAFT_PREFER_SMJ")
+      .map(v => PreferSortMergeJoin -> Set("1", "true").contains(v.trim.toLowerCase).toString)
+
+  def builder(cores: Int, sfDir: Option[String]): SparkSession.Builder =
+    profile(cores, sfDir).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+
+  /** A session on [[cores]] cores for a main reading the corpus at `sfDir`,
+    * with the startup warning silenced and Spark logging at WARN.
+    */
+  def getOrCreate(sfDir: Option[String]): SparkSession = {
+    quietStartupWarnings()
+    val spark = builder(cores, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** As above, for the corpus at SPARK_GRAFT_SF_DIR when it is set. */
+  def getOrCreate(): SparkSession = getOrCreate(sys.env.get("SPARK_GRAFT_SF_DIR"))
 }
 
 /** Accessors for the driver-provided TPC-H-ish test tables
@@ -207,7 +211,7 @@ object Tables {
     * the observed dtype here means every downstream query keeps seeing
     * epoch-micros longs regardless of which physical encoding the parquet
     * carries. The NTZ→timestamp cast is identity because the session time
-    * zone is pinned to UTC (builder above).
+    * zone is pinned to UTC (settings above).
     */
   def toEpochMicros(df: DataFrame, colName: String): DataFrame = {
     import org.apache.spark.sql.types._

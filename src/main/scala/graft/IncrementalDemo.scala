@@ -101,8 +101,7 @@ object IncrementalDemo {
     val nBatches = args.lift(1).map(_.toInt).getOrElse(3)
     val workDir = args.lift(2).getOrElse("/tmp/graft_incremental")
     GraftSession.quietStartupWarnings()
-    val spark = GraftSession.builder()
-      .config("spark.sql.debug.maxToStringFields", "2000")
+    val spark = GraftSession.builder(GraftSession.cores, Some(sfDir))
       // the bucketed claim-store tables below live in the session catalog
       // with external data paths under workDir; the warehouse dir only
       // backs the default database's metadata and must stay out of the repo

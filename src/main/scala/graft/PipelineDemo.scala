@@ -51,7 +51,8 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val nFrames = args.headOption.map(_.toInt).getOrElse(20000)
     val outDir = args.lift(1).getOrElse("/tmp/graft_pipeline_demo")
-    val spark = GraftSession.getOrCreate()
+    // synthesized frames: no corpus to size the shuffle start for
+    val spark = GraftSession.getOrCreate(None)
 
     val t0 = System.nanoTime()
     val frames = synthFrames(spark, nFrames)

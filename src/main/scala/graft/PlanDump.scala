@@ -28,7 +28,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = GraftSession.getOrCreate()
+    val spark = GraftSession.getOrCreate(Some(sfDir))
     val sb = new StringBuilder
     sb.append("# Flagship query plans (generated by `graft.PlanDump` — do not edit)\n\n")
     sb.append(s"Formatted physical plans at `$sfDir`, optimizer-initial (AQE re-plans at\n")

@@ -13,7 +13,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.getOrCreate()
+    val spark = GraftSession.getOrCreate(Some(sfDir))
     // SPARK_GRAFT_PROFILE_JOBS=1: print per-Spark-job wall times — the
     // breakdown that separates cache-build jobs, codegen-heavy first
     // executions, and the steady-state query cost inside one run() sample

@@ -3,8 +3,8 @@ package org.apache.spark.sql.graft
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
@@ -18,19 +18,6 @@ import org.apache.spark.sql.types.StructType
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a SQL function on an ALREADY-RUNNING session (extensions via
-    * `spark.sql.extensions` only bind at session creation).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      info: ExpressionInfo,
-      builder: Seq[Expression] => Expression
-  ): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 
   /** Run `df` once and store its rows as local checkpoint blocks in
     * Catalyst's internal format, as `localCheckpoint(eager = true)` does. Its

@@ -36,6 +36,13 @@ class SessionSizingSpec extends AnyFunSuite {
     }
   }
 
+  test("a session given no corpus, or a missing one, starts at 1x cores") {
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert(GraftSession.profile(8, None)(key) == "8")
+    val missing = java.nio.file.Files.createTempDirectory("graft_sizing").toString + "/nope"
+    assert(GraftSession.profile(8, Some(missing))(key) == "8")
+  }
+
   test("dirBytes walks a directory tree and tolerates a missing path") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sizing").toFile
     val sub = new java.io.File(dir, "sub"); sub.mkdirs()

@@ -18,21 +18,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Small parallelism for tiny fixtures; no corpus, so the 1× start. */
+  val Cores = 4
+
+  /** The session profile every main runs ([[graft.GraftSession.settings]]). */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same extensions as GraftSession: SQL function registration + the
-      // RangeJoinRewrite optimizer rule (plan assertions must see it)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // reference semantics: Python dict building is last-wins on key collision
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // tolerate nanos-encoded fixtures (Tables.toEpochMicros normalizes)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.builder(Cores, None).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
